@@ -153,3 +153,14 @@ def test_spark_submit_pyfiles_deploy(spark, docs_parquet, tmp_path):
     assert lineage["total_rows"] > 0
     # the submitted master must win over the library default
     assert lineage["config"]["master"] == "local[2]"
+
+
+def test_default_driver_memory_fits_machine():
+    """The default driver heap is half of RAM, capped at the old 24g."""
+    from vector2dggs_spark.session import _default_driver_memory
+
+    mem = _default_driver_memory()
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    assert mem == f"{min(24 * 1024, kb // 2048)}m"
+    assert int(mem[:-1]) * 1024 <= kb // 2

@@ -8,6 +8,7 @@ import pytest
 
 from vector2dggs_spark.dggs import get_backend
 from vector2dggs_spark.dggs import h3core as H
+from vector2dggs_spark.dggs.h3core import tables as T
 
 
 def test_published_vectors():
@@ -172,8 +173,52 @@ def test_parent_expr_native(spark):
     assert list(out["h3_03"]) == list(expected)
 
 
+def _path_one_pair_reference(a: int, b: int) -> np.ndarray:
+    """The per-pair gridPathCells construction, one pair per call: same
+    home face -> hex2d interpolation at 2n+1 ``np.linspace`` samples,
+    otherwise a 256-sample lat/lng chord; dedup keep-first."""
+    va = np.array([a], dtype=np.uint64)
+    vb = np.array([b], dtype=np.uint64)
+    res = int(H.get_resolution(va)[0])
+    fa, ia, ja, ka, sub = H._cells_to_substrate_ijk(va)
+    fb, ib, jb, kb, _ = H._cells_to_substrate_ijk(vb)
+    step = T.M_SQRT7 if sub > res else 1.0
+    if int(fa[0]) == int(fb[0]):
+        xa, ya = H._ijk_to_hex2d(float(ia[0]), float(ja[0]), float(ka[0]))
+        xb, yb = H._ijk_to_hex2d(float(ib[0]), float(jb[0]), float(kb[0]))
+        n = max(int(np.ceil(np.hypot(xb - xa, yb - ya) / step)), 1)
+        t = np.linspace(0.0, 1.0, 2 * n + 1)
+        xs = (xa + (xb - xa) * t) / (T.M_SQRT7 ** sub)
+        ys = (ya + (yb - ya) * t) / (T.M_SQRT7 ** sub)
+        lat, lon = H._hex2d_res0_to_geo(np.full(len(xs), int(fa[0])), xs, ys)
+    else:
+        la, lo = H.cell_to_latlng(va)
+        lb, lob = H.cell_to_latlng(vb)
+        t = np.linspace(0, 1, 256)
+        lat = la[0] + (lb[0] - la[0]) * t
+        lon = lo[0] + (lob[0] - lo[0]) * t
+    cells = H.latlng_to_cell(lat, lon, res)
+    _, idx = np.unique(cells, return_index=True)
+    return cells[np.sort(idx)]
+
+
+def _face_edge_segment(res: int) -> np.ndarray:
+    """Two vertices a few samples either side of the first home-face
+    change on the chord between the centres of face 0 and a neighbour."""
+    f1 = int(H._FOLD_FACE[0, 0])
+    a, b = np.degrees(T.FACE_CENTER_GEO[0]), np.degrees(T.FACE_CENTER_GEO[f1])
+    t = np.linspace(0, 1, 400)[:, None]
+    lat, lon = (a + (b - a) * t).T
+    face = H._cells_to_substrate_ijk(H.latlng_to_cell(lat, lon, res))[0]
+    i = int(np.argmax(face != face[0]))
+    return np.column_stack([lon[[i - 3, i + 3]], lat[[i - 3, i + 3]]])
+
+
 def test_grid_path_cells():
-    """gridPathCells: connected chain of neighbors including endpoints."""
+    """gridPathCells: connected chain of neighbors including endpoints;
+    a batched call equals its one-pair calls concatenated, each equal to
+    the per-pair construction; linetrace equals the union of per-segment
+    paths deduped keep-first."""
     a = int(H.latlng_to_cell([-44.2], [-176.5], 8)[0])
     b = int(H.latlng_to_cell([-44.0], [-176.25], 8)[0])
     path = H.grid_path_cells(a, b)
@@ -185,6 +230,98 @@ def test_grid_path_cells():
         assert int(v) in nb, (format(int(u), "x"), format(int(v), "x"))
     # degenerate path: same cell
     assert list(H.grid_path_cells(a, a)) == [a]
+    assert len(H.grid_path_cells([], [])) == 0
+
+    cross = _face_edge_segment(5)
+    ce = H.latlng_to_cell(cross[:, 1], cross[:, 0], 5)
+    face = H._cells_to_substrate_ijk(ce)[0]
+    assert face[0] != face[1]  # the segment really crosses a face edge
+    lines = [
+        # same-face segments, one repeated vertex (a zero-length segment)
+        (np.array([[-176.5, -44.2], [-176.35, -44.05], [-176.35, -44.05],
+                   [-176.3, -44.15], [-176.6, -44.3]]), 8),
+        (np.array([[-176.5, -44.2], [-176.3, -44.15]]), 9),  # two vertices
+        (np.array([[-176.5, -44.2]]), 9),  # one vertex
+        (np.array([[179.95, -44.10], [-179.95, -44.12]]), 9),  # antimeridian
+        # a face-edge crossing between two same-face segments
+        (np.vstack([cross[:1] + [0.3, 0.0], cross, cross[1:] + [0.0, 0.3]]), 5),
+    ]
+    # long same-face lines around face centres: their sample parameter
+    # must round exactly like np.linspace, or a few cells change (with
+    # this seed, plain i / (cnt - 1) changes 4 of the 100 lines)
+    rng = np.random.default_rng(2)
+    for _ in range(100):
+        fc = np.degrees(T.FACE_CENTER_GEO[int(rng.integers(20))])
+        span = float(rng.choice([1, 5, 15]))
+        nv = int(rng.integers(2, 6))
+        coords = np.column_stack([fc[1] + rng.uniform(-span, span, nv),
+                                  fc[0] + rng.uniform(-span, span, nv)])
+        lines.append((coords, int(rng.choice([2, 5, 7, 9]))))
+    backend = get_backend("h3")
+    for coords, res in lines:
+        ends = H.latlng_to_cell(coords[:, 1], coords[:, 0], res)
+        pairs = list(zip(ends[:-1].tolist(), ends[1:].tolist()))
+        one = [H.grid_path_cells(u, v) for u, v in pairs]
+        for (u, v), p in zip(pairs, one):
+            assert np.array_equal(p, _path_one_pair_reference(u, v)), (u, v)
+        if pairs:
+            batched = H.grid_path_cells(ends[:-1], ends[1:])
+            assert np.array_equal(batched, np.concatenate(one))
+        tokens = H.to_token(np.concatenate(one) if one else ends)
+        _, idx = np.unique(tokens, return_index=True)
+        assert list(backend.linetrace(coords, res)) == list(tokens[np.sort(idx)])
+
+
+def _ngon(rng, clon, clat, radius, n):
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    r = radius * rng.uniform(0.5, 1.0, n)
+    ring = np.column_stack([clon + r * np.cos(ang), clat + r * np.sin(ang)])
+    return np.vstack([ring, ring[:1]])
+
+
+def test_polyfill_small_polygons_match_disk_cover():
+    """Small polygons (bbox disk radius <= 8, the range once covered by
+    a grid-disk BFS) now take the vectorized sample-grid cover; the
+    result must equal a centre-in-polygon filter over the grid disk of
+    radius k + 2 around the bbox centre cell (k = ceil(half bbox
+    diagonal / min spacing)).  Triangles, n-gons, polygons with a hole
+    and polygons within 2 cells of a pentagon centre, res 2..9."""
+    from vector2dggs_spark.geometry.kernels import points_in_polygon
+
+    backend = get_backend("h3")
+    rng = np.random.default_rng(20)
+    pents = sorted(T.PENTAGON_CELLS)
+    checked = 0
+    for res in (2, 3, 5, 7, 9):
+        s = H.min_center_spacing_deg(res)
+        for case in range(8):
+            if case < 3:  # within 2 cells of a pentagon centre
+                plat, plon = np.degrees(T.BASE_CENTER_GEO[pents[(res + case) % 12]])
+                clat = plat + rng.uniform(-2, 2) * s
+                clon = plon + rng.uniform(-2, 2) * s
+            else:
+                clat, clon = rng.uniform(-70, 70), rng.uniform(-179, 179)
+            n = 3 if case % 2 == 0 else int(rng.integers(4, 9))
+            outer = _ngon(rng, clon, clat, rng.uniform(1.0, 4.0) * s, n)
+            rings = [outer]
+            if case in (1, 4):
+                rings.append(_ngon(rng, clon, clat, 0.4 * s, 5)[::-1])
+            ext = outer
+            half_diag = 0.5 * np.hypot(np.ptp(ext[:, 0]), np.ptp(ext[:, 1]))
+            k = int(np.ceil(half_diag / s))
+            assert k + 2 <= 8, (res, case, k)
+            seed = H.latlng_to_cell(
+                [(ext[:, 1].min() + ext[:, 1].max()) / 2],
+                [(ext[:, 0].min() + ext[:, 0].max()) / 2],
+                res,
+            )
+            disk = H.grid_disk(seed, k + 2)[0]
+            lat, lon = H.cell_to_latlng(disk)
+            expected = H.to_token(disk[points_in_polygon(lon, lat, rings)])
+            got = backend.polyfill(rings, res)
+            assert list(got) == list(expected), (res, case)
+            checked += len(got) > 0
+    assert checked >= 20  # at least half hold a cell centre
 
 
 # ---------------------------------------------------------------- pentagons

@@ -87,9 +87,6 @@ class H3Backend:
         return str(H.to_token(H.cell_to_center_child(v, res))[0])
 
     # ---------------------------------------------------------- geometry ops
-    # grid-disk BFS is used only for tiny covers (it costs O(k) Python
-    # rounds); anything larger takes the fully-vectorized sample grid
-    _DISK_K_CAP = 8
     _SAMPLE_CAP = 40_000_000  # hard bound on sample-grid size
     # katana sizing: a piece ~this many cells across keeps each piece's
     # sample grid around 10^5 points — the vectorized sweet spot
@@ -104,19 +101,18 @@ class H3Backend:
     def _bbox_candidates(self, ext, res: int) -> np.ndarray:
         """u64 cells at ``res`` whose centers may fall in the bbox of
         ``ext`` — a conservative cover via ONE vectorized encode of a
-        sample grid.  Hexagons of neighbor spacing s contain a disk of
-        radius s/2, so a grid at step 0.6·(global min spacing) puts at
-        least one sample in every cell intersecting the padded bbox
-        (longitude compression only densifies the grid in angular terms
-        — always conservative).  Replaces the round-1 single grid-disk
-        BFS (hard k>600 failure, one-point-sampled spacing) and is ~10×
-        faster at large k since there are no per-ring Python rounds."""
-        k = self._bbox_k(ext, res)
-        if k <= self._DISK_K_CAP or res < 2:
+        sample grid, for every bbox size.  Hexagons of neighbor spacing
+        s contain a disk of radius s/2, so a grid at step 0.6·(global
+        min spacing) puts at least one sample in every cell intersecting
+        the padded bbox (longitude compression only densifies the grid
+        in angular terms — always conservative).  A grid-disk BFS costs
+        k Python rounds of 6·k-cell re-encodes, so it is kept only at
+        res < 2, where the sample-cap recursion (res − 2) cannot go."""
+        if res < 2:
             clon = (ext[:, 0].min() + ext[:, 0].max()) / 2.0
             clat = (ext[:, 1].min() + ext[:, 1].max()) / 2.0
             seed = H.latlng_to_cell([clat], [clon], res)
-            return H.grid_disk(seed, k)[0]
+            return H.grid_disk(seed, self._bbox_k(ext, res))[0]
         spacing = H.min_center_spacing_deg(res)
         step = 0.6 * spacing
         pad = 2.0 * spacing
@@ -140,9 +136,10 @@ class H3Backend:
         """Cells whose center is inside the polygon — H3 v4
         'containment: center' modality (reference h3vectorindexer.py:16-18).
 
-        Candidates via a conservative bbox cover (single disk or
-        hierarchical children-of-coarser-cover), then one vectorized PIP
-        pass over candidate centers."""
+        Candidates via a conservative bbox cover (one vectorized encode
+        of a sample grid; children of a coarser cover for gigantic
+        pieces; a grid disk at res < 2), then one vectorized PIP pass
+        over candidate centers."""
         from vector2dggs_spark.geometry.kernels import points_in_polygon
 
         cand = self._bbox_candidates(rings[0], res)
@@ -153,16 +150,14 @@ class H3Backend:
     def linetrace(self, coords, res):
         """Reference C2 exactly (h3vectorindexer.py:20-28): per segment,
         grid_path_cells between the endpoint cells; union of segment
-        paths, deduped keep-first."""
+        paths, deduped keep-first.  All segments go through ONE batched
+        grid_path_cells call (one decode, one encode per line) and the
+        whole line dedups once — the same cells in the same order as a
+        per-segment dedup followed by the union."""
         ends = H.latlng_to_cell(coords[:, 1], coords[:, 0], res)
-        paths = []
-        for i in range(len(ends) - 1):
-            paths.append(H.grid_path_cells(int(ends[i]), int(ends[i + 1])))
-        if not paths:
-            paths = [ends]
-        cells = H.to_token(np.concatenate(paths))
+        cells = H.grid_path_cells(ends[:-1], ends[1:]) if len(ends) > 1 else ends
         _, idx = np.unique(cells, return_index=True)
-        return cells[np.sort(idx)]
+        return H.to_token(cells[np.sort(idx)])
 
     def grid_disk(self, cells, res, k):
         v = H.from_token(np.asarray(cells, dtype=str))

@@ -893,38 +893,67 @@ def cell_boundary(cells) -> tuple[np.ndarray, np.ndarray]:
     return lat_out, lon_out
 
 
-def grid_path_cells(a: int, b: int) -> np.ndarray:
-    """Cells on the hex-grid line from ``a`` to ``b`` (inclusive) — the
-    h3 gridPathCells shape: linear interpolation between the two centers
-    with per-sample rounding to the containing cell.  Same-home-face
-    pairs interpolate in the shared gnomonic (substrate hex2d) frame —
-    exactly the hex-line construction; cross-face pairs interpolate the
-    geodesic chord (the reference's own gridPathCells also degrades for
-    distant cells)."""
-    va = np.array([a], dtype=np.uint64)
-    vb = np.array([b], dtype=np.uint64)
-    res = int(get_resolution(va)[0])
-    fa, ia, ja, ka, sub = _cells_to_substrate_ijk(va)
-    fb, ib, jb, kb, _ = _cells_to_substrate_ijk(vb)
+def grid_path_cells(a, b) -> np.ndarray:
+    """Cells on the hex-grid lines from ``a[s]`` to ``b[s]`` (inclusive),
+    for every segment ``s`` of the endpoint arrays ``a``/``b`` — the h3
+    gridPathCells shape: linear interpolation between the two centers
+    with per-sample rounding to the containing cell.  Returns every
+    segment's path, deduped keep-first within the segment, concatenated
+    in segment order (a batched call equals the concatenation of its
+    one-pair calls).
+
+    Same-home-face pairs interpolate in the shared gnomonic (substrate
+    hex2d) frame at 2n+1 samples (n = hex distance) — exactly the
+    hex-line construction; cross-face pairs take a 256-sample geodesic
+    chord (the reference's own gridPathCells also degrades for distant
+    cells).  All endpoints decode in one call and all samples encode in
+    one ``latlng_to_cell`` call, so a line costs one vectorized pass,
+    not one per segment."""
+    a = np.atleast_1d(np.asarray(a, dtype=np.uint64))
+    b = np.atleast_1d(np.asarray(b, dtype=np.uint64))
+    if a.shape != b.shape:
+        raise ValueError("endpoint arrays differ in length")
+    m = len(a)
+    if m == 0:
+        return np.empty(0, dtype=np.uint64)
+    res = int(get_resolution(a)[0])
+    face, i, j, k, sub = _cells_to_substrate_ijk(np.concatenate([a, b]))
+    x, y = _ijk_to_hex2d(i.astype(np.float64), j.astype(np.float64), k.astype(np.float64))
+    same = face[:m] == face[m:]
     step = T.M_SQRT7 if sub > res else 1.0  # res-cell spacing in substrate units
-    if int(fa[0]) == int(fb[0]):
-        xa, ya = _ijk_to_hex2d(float(ia[0]), float(ja[0]), float(ka[0]))
-        xb, yb = _ijk_to_hex2d(float(ib[0]), float(jb[0]), float(kb[0]))
-        n = max(int(np.ceil(np.hypot(xb - xa, yb - ya) / step)), 1)
-        t = np.linspace(0.0, 1.0, 2 * n + 1)  # 2x oversample: < 1/2 cell/step
-        xs = (xa + (xb - xa) * t) / (T.M_SQRT7 ** sub)
-        ys = (ya + (yb - ya) * t) / (T.M_SQRT7 ** sub)
-        lat, lon = _hex2d_res0_to_geo(np.full(len(xs), int(fa[0])), xs, ys)
-    else:
-        la, lo = cell_to_latlng(va)
-        lb, lob = cell_to_latlng(vb)
-        n = 256
-        t = np.linspace(0, 1, n)
-        lat = la[0] + (lb[0] - la[0]) * t
-        lon = lo[0] + (lob[0] - lo[0]) * t
+    dx, dy = x[m:] - x[:m], y[m:] - y[:m]
+    n = np.maximum(np.ceil(np.hypot(dx, dy) / step).astype(np.int64), 1)
+    cnt = np.where(same, 2 * n + 1, 256)  # 2x oversample: < 1/2 cell/step
+    seg = np.repeat(np.arange(m), cnt)
+    start = np.cumsum(cnt) - cnt
+    # sample parameter rounded exactly like np.linspace(0, 1, cnt)
+    t = (np.arange(len(seg)) - start[seg]) * (1.0 / (cnt - 1))[seg]
+    t[start + cnt - 1] = 1.0
+    lat = np.empty(len(seg))
+    lon = np.empty(len(seg))
+    ss = same[seg]
+    if ss.any():
+        scale = T.M_SQRT7 ** sub
+        sg, ts = seg[ss], t[ss]
+        xs = (x[:m][sg] + dx[sg] * ts) / scale
+        ys = (y[:m][sg] + dy[sg] * ts) / scale
+        lat[ss], lon[ss] = _hex2d_res0_to_geo(face[:m][sg], xs, ys)
+    if not ss.all():
+        cs = ~ss
+        ends = np.nonzero(np.concatenate([~same, ~same]))[0]
+        elat = np.empty(2 * m)
+        elon = np.empty(2 * m)
+        elat[ends], elon[ends] = _substrate_to_geo(face[ends], i[ends], j[ends], k[ends], sub)
+        sg, tc = seg[cs], t[cs]
+        lat[cs] = elat[:m][sg] + (elat[m:] - elat[:m])[sg] * tc
+        lon[cs] = elon[:m][sg] + (elon[m:] - elon[:m])[sg] * tc
     cells = latlng_to_cell(lat, lon, res)
-    _, idx = np.unique(cells, return_index=True)
-    return cells[np.sort(idx)]
+    # keep-first dedup within each segment: stable sort by (segment, cell)
+    order = np.lexsort((cells, seg))
+    oc, oseg = cells[order], seg[order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = (oc[1:] != oc[:-1]) | (oseg[1:] != oseg[:-1])
+    return cells[np.sort(order[first])]
 
 
 def mean_center_spacing_deg(res: int) -> float:

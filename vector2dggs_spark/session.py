@@ -16,6 +16,18 @@ def under_spark_submit() -> bool:
     return "PYSPARK_GATEWAY_PORT" in os.environ
 
 
+def _default_driver_memory() -> str:
+    """Half of this machine's RAM, at most 24g: a fixed 24g heap on a
+    smaller machine lets the local-mode JVM grow until the OOM killer
+    stops it.  Falls back to 24g where /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def get_spark(cores: int | None = None, app: str = "vector2dggs_spark", shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -50,6 +62,7 @@ def get_spark(cores: int | None = None, app: str = "vector2dggs_spark", shuffle_
         # standalone/driver-side invocation (tests, bench, python -m):
         # local mode with the requested parallelism
         builder = builder.master(f"local[{cores}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
     return builder.getOrCreate()
